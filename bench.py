@@ -306,13 +306,15 @@ def _spark_calibration(spark, rows: int = CALIB_ROWS,
     shuffle job moves a high-cardinality exchange (no map-side-combine
     win) through the memory/disk path — the r14 degradation hit
     shuffle-heavy rows while pure hashing stayed fast, so BOTH
-    subsystems are stamped. Shuffle partitions are PINNED for the
-    duration so the stamps compare across rounds even if the session
-    default changes (it did in r14: cores -> 4x cores)."""
+    subsystems are stamped. The batch shuffle partition count is
+    PINNED for the duration so the stamps compare across rounds even
+    if the session default changes (it did in r14: cores -> 4x cores)."""
     from pyspark.sql import functions as F
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    from streaming_data_spark.session import BATCH_PARTITIONS_KEY
+
+    old_parts = spark.conf.get(BATCH_PARTITIONS_KEY)
+    spark.conf.set(BATCH_PARTITIONS_KEY, "64")
 
     def _cpu(n: int) -> float:
         t0 = time.perf_counter()
@@ -334,7 +336,7 @@ def _spark_calibration(spark, rows: int = CALIB_ROWS,
         _shuffle(shuffle_rows // 10)
         shuf = round(min(_shuffle(shuffle_rows) for _ in range(2)), 3)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        spark.conf.set(BATCH_PARTITIONS_KEY, old_parts)
     return cpu, shuf
 
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from streaming_data_spark.session import batch_shuffle_partitions
+
 # Fixed per-language stopword lists (tiny by design: the operator is a
 # deterministic n-gram/stopword heuristic, not a model).
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -145,7 +147,8 @@ def lm_scores(
     equality gate); only the physical key distribution changes.
 
     ``hot_frac="auto"`` (default) sets the threshold from the fair
-    shuffle share: a key is hot when its share ≥ 4/shuffle_partitions
+    shuffle share: a key is hot when its share ≥ 4/P, with P the batch
+    shuffle partition count (``session.batch_shuffle_partitions``)
     (≥ 4× one reducer's fair load — below that a key cannot straggle
     a task, above it AQE's SMJ-only skew split may not apply). On
     local[32] nothing crosses it (the probe/pytest tier exercises the
@@ -155,8 +158,7 @@ def lm_scores(
     from streaming_data_spark.operators.skew import skew_split_inner_join
 
     if hot_frac == "auto":
-        parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        hot_frac = 4.0 / max(parts, 1)
+        hot_frac = 4.0 / max(batch_shuffle_partitions(df.sparkSession), 1)
 
     toks = F.split(F.trim(text_col), r"\s+")
     m = F.size(toks) - 1

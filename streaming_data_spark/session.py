@@ -8,16 +8,28 @@ driver contract, jobs) gets identical semantics:
 - Arrow on for the few Pandas-UDF operators (vectorized transfer).
 - Session timezone pinned to UTC so timestamp semantics are stable and
   oracle-comparable (DuckDB timestamps are UTC-naive).
-- ``spark.sql.shuffle.partitions`` defaults to 4x the local core
-  count and AQE coalesces DOWN per query; on a real cluster the same
-  rule scales to the few-thousand a 100 TB shuffle needs. The 4x
-  headroom is measured, not aesthetic: x31_bigram_lm at x100 reads
-  30.0 s with initial=cores (32) and 5.0 s at 128 — the explode-
-  amplified bigram shuffle spills at 32 sort segments, and AQE can
-  coalesce an over-provisioned shuffle but never split an
-  under-provisioned one (the r13/r14 scale finding). Small queries
-  pay nothing: AQE merges their shuffles back to a handful of
-  partitions at runtime.
+- Two shuffle partition counts, because plans that adapt and plans
+  that cannot want different ones:
+  - batch (``spark.sql.adaptive.coalescePartitions.initialPartitionNum``,
+    read via ``batch_shuffle_partitions``) defaults to 4x the local
+    core count, and AQE coalesces it DOWN per query; on a real cluster
+    the same rule scales to the few-thousand a 100 TB shuffle needs.
+    The 4x headroom is measured, not aesthetic: x31_bigram_lm at x100
+    reads 30.0 s with initial=cores (32) and 5.0 s at 128 — the
+    explode-amplified bigram shuffle spills at 32 sort segments, and
+    AQE can coalesce an over-provisioned shuffle but never split an
+    under-provisioned one (the r13/r14 scale finding). Small queries
+    pay nothing: AQE merges their shuffles back to a handful of
+    partitions at runtime.
+  - fixed (``spark.sql.shuffle.partitions``) is the core count. It is
+    what plans that cannot adapt use: stateful streaming operators
+    (Structured Streaming runs them with AQE off) and any plan with
+    AQE disabled. One partition per core makes each micro-batch a
+    single task wave: one state store, one state commit and one sink
+    file per core. The count a streaming query starts with is frozen
+    in its checkpoint (the state store is partitioned by it), so a
+    restarted query keeps its original count whatever the session
+    says.
 """
 
 from __future__ import annotations
@@ -31,12 +43,39 @@ def _local_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+# The conf holding the batch (AQE initial) shuffle partition count;
+# only this module names it — consumers go through
+# ``batch_shuffle_partitions`` or import the key.
+BATCH_PARTITIONS_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
 def _default_shuffle_partitions(cores: int) -> int:
-    """4x cores: AQE coalesces over-provisioned shuffles down at
-    runtime but cannot split an under-provisioned one, so the initial
-    count carries headroom for explode-amplified shuffles (measured:
-    x31_bigram_lm at x100, 32 -> 30.0 s vs 128 -> 5.0 s)."""
+    """4x cores for batch plans: AQE coalesces over-provisioned
+    shuffles down at runtime but cannot split an under-provisioned
+    one, so the initial count carries headroom for explode-amplified
+    shuffles (measured: x31_bigram_lm at x100, 32 -> 30.0 s vs 128 ->
+    5.0 s)."""
     return 4 * cores
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, in whole GiB, between 1g and
+    32g: in local mode the one driver JVM holds every task slot, and
+    the other half is left to the Python workers, the page cache and
+    the JVM's off-heap use (a 15 GB host gets 7g)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "4g"
+    return f"{min(32, max(1, phys // 2 >> 30))}g"
+
+
+def batch_shuffle_partitions(spark: SparkSession) -> int:
+    """The shuffle partition count batch plans start from: the AQE
+    initial count ``get_session`` sets, or ``spark.sql.shuffle.partitions``
+    for a session built elsewhere (where the two are the same number)."""
+    value = spark.conf.get(BATCH_PARTITIONS_KEY, None)
+    return int(value or spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def get_session(
@@ -47,9 +86,11 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Local mode defaults to ``local[$SPARK_GRAFT_CPUS]`` with shuffle
-    partitions = 4x cores (AQE coalesces small shuffles back down;
-    see _default_shuffle_partitions for the measured rationale).
+    Local mode defaults to ``local[$SPARK_GRAFT_CPUS]``. Batch plans
+    start from ``shuffle_partitions`` (default 4x cores; AQE coalesces
+    small shuffles back down, see _default_shuffle_partitions for the
+    measured rationale); streaming state and AQE-off plans use one
+    partition per core (see the module docstring).
     """
     cores = _local_cores()
     builder = (
@@ -64,19 +105,21 @@ def get_session(
         # -- JVM sizing: in local[N] the ONE driver JVM hosts all N
         # task slots, and Spark's 1g default heap starves 32-way
         # parallel shuffles (observed: q21's triple self-join OOMs at
-        # 10x sf0.1). Only consulted at JVM launch — a getOrCreate
-        # against a live session keeps its existing heap. On a real
-        # cluster executors size their own JVMs and this is moot.
+        # 10x sf0.1), so the default is sized from the host. Only
+        # consulted at JVM launch — a getOrCreate against a live
+        # session keeps its existing heap. On a real cluster executors
+        # size their own JVMs and this is moot.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
-        # -- shuffle sizing -------------------------------------------
+        # -- shuffle sizing: batch ceiling vs fixed count ---------------
         .config(
-            "spark.sql.shuffle.partitions",
+            BATCH_PARTITIONS_KEY,
             str(shuffle_partitions if shuffle_partitions is not None
                 else _default_shuffle_partitions(cores)),
         )
+        .config("spark.sql.shuffle.partitions", str(cores))
         # -- Python data sources: allow pushFilters() (rest_pages) -----
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # -- Arrow for pandas_udf / mapInPandas / toPandas -------------
@@ -95,8 +138,8 @@ def get_session(
 
 # -- input-bytes-aware shuffle sizing (r13 scale finding) ---------------
 #
-# AQE coalesces small shuffle partitions DOWN from the initial
-# ``spark.sql.shuffle.partitions`` but — skew-join splitting aside —
+# AQE coalesces small shuffle partitions DOWN from the initial batch
+# count (``BATCH_PARTITIONS_KEY``) but — skew-join splitting aside —
 # never splits past that initial count, so an initial count sized for
 # the small scale silently becomes a spill cliff at the large one
 # (measured: x35_lm_score at x1000, ~1B token instances — 32
@@ -203,19 +246,21 @@ def autosize_shuffle_partitions(
     floor: int | None = None,
     cap: int = _SHUFFLE_PARTITION_CAP,
 ) -> int:
-    """Set ``spark.sql.shuffle.partitions`` from the bytes under
-    ``paths`` (the tables the upcoming queries read — passing the
-    whole dataset dir is correct: the count is an initial CEILING
-    that AQE coalesces down per-query, so unread tables only ever
-    round it up, never hurt).  Returns the count applied.
+    """Set the batch shuffle partition count (``BATCH_PARTITIONS_KEY``)
+    from the bytes under ``paths`` (the tables the upcoming queries
+    read — passing the whole dataset dir is correct: the count is an
+    initial CEILING that AQE coalesces down per-query, so unread
+    tables only ever round it up, never hurt).  Returns the count
+    applied.
 
     ``n = clamp(floor, ceil(bytes / target_bytes), cap)`` with
     ``floor`` defaulting to max(core parallelism, the session's
-    CURRENT setting) — autosizing only ever RAISES the count (the
+    CURRENT batch count) — autosizing only ever RAISES the count (the
     same asymmetry as the 4x default: undershoot is the direction
     AQE cannot repair). ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides
     the computation — the hand knob still wins when a probe needs a
-    fixed count.
+    fixed count. The fixed ``spark.sql.shuffle.partitions`` (streaming
+    state, AQE-off plans) is left alone.
     """
     forced = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if forced:
@@ -224,11 +269,8 @@ def autosize_shuffle_partitions(
         if floor is not None:
             lo = floor
         else:
-            try:
-                current = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            except Exception:
-                current = 0
-            lo = max(spark.sparkContext.defaultParallelism, current)
+            lo = max(spark.sparkContext.defaultParallelism,
+                     batch_shuffle_partitions(spark))
         n = min(cap, max(lo, -(-input_bytes(spark, *paths) // target_bytes)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set(BATCH_PARTITIONS_KEY, str(n))
     return n

@@ -166,10 +166,12 @@ def dead_letter_split(
         ),
     )
     is_dead = F.col("_parsed").isNull() | F.col("_parsed._corrupt").isNotNull()
+    # The raw envelope column goes before the payload is flattened, so
+    # a payload field that shares its name (``value``) survives.
     good = (
         parsed.filter(~is_dead)
-        .select(*[c for c in stream.columns], F.col("_parsed.*"))
-        .drop(value_col, "_corrupt")
+        .select(*[c for c in stream.columns if c != value_col], F.col("_parsed.*"))
+        .drop("_corrupt")
     )
     dead = parsed.filter(is_dead).drop("_parsed")
     return good, dead
@@ -177,6 +179,15 @@ def dead_letter_split(
 
 # --------------------------------------------------------------------------
 # Stateful / windowed (A3/A8 streaming forms, T3/T4)
+#
+# Every stateful helper below shuffles into P state partitions, where
+# P is ``spark.sql.shuffle.partitions`` when the query first starts
+# (session.get_session: one per core). Streaming runs these operators
+# with AQE off, so P is also the micro-batch's task count: each batch
+# runs P tasks, opens and commits P state stores, and a file sink
+# appends up to P files. P is frozen in the checkpoint's offset log —
+# a restarted query keeps it whatever the session says; changing it
+# means a new checkpoint.
 # --------------------------------------------------------------------------
 
 def windowed_rollup(
@@ -507,9 +518,10 @@ def streaming_rolling_sum(
     at hour H holds the rolling 24 h total as of H — maintained
     incrementally instead of recomputed per poll like the reference.
 
-    Scale: one shuffle keyed on (window, key) with map-side partial
-    aggregation; state is (duration/slide) windows per key, bounded by
-    the watermark."""
+    Scale: one shuffle keyed on (window, key) into the P state
+    partitions (section note), with map-side partial aggregation;
+    state is (duration/slide) windows per key, bounded by the
+    watermark."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window_duration, slide), key)
@@ -539,7 +551,8 @@ def dedup_stream(
 
     Scale: state is one entry per key seen within the watermark
     horizon (bounded — unlike plain ``dropDuplicates`` on a stream,
-    whose state grows forever); one shuffle on the dedup keys."""
+    whose state grows forever); one shuffle on the dedup keys into the
+    P state partitions (section note)."""
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
@@ -564,8 +577,9 @@ def streaming_session_rollup(
     stream==batch equality test uses the same expression on a static
     frame.
 
-    Scale: one shuffle on the session key; state per key is the open
-    window set, bounded by the watermark."""
+    Scale: one shuffle on the session key into the P state partitions
+    (section note); state per key is the open window set, bounded by
+    the watermark."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap), key)
@@ -632,8 +646,9 @@ def entry_bounce_stream(
     second (batch or foreachBatch) step because chained streaming
     aggregations over session windows are unsupported.
 
-    Scale: one shuffle on the session key; JVM-side state merged by
-    Spark's session-window machinery, watermark-bounded."""
+    Scale: one shuffle on the session key into the P state partitions
+    (section note); JVM-side state merged by Spark's session-window
+    machinery, watermark-bounded."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap), key)
@@ -699,8 +714,9 @@ def stream_stream_join(
     helper refuses to build an unbounded join rather than defaulting
     one side to "keep everything".
 
-    Scale: both streams shuffle once on ``key`` (co-partitioned state
-    store); per-key state is bounded by watermark + max_delay horizon.
+    Scale: both streams shuffle once on ``key`` into the same P state
+    partitions (section note; co-partitioned state stores); per-key
+    state is bounded by watermark + max_delay horizon.
     ``how`` may be "inner" or "leftOuter" (outer emits unmatched left
     rows only after the watermark proves no match can arrive).
     """

@@ -9,9 +9,10 @@ express the semantics (session length is data-dependent, not fixed).
 
 Scale notes: state is per-key and O(1) per key (one open session
 tuple); the shuffle is the groupBy on the session key, identical to
-what any keyed stateful op pays. Arrow moves each key-batch into
-pandas, so per-event Python overhead is amortized per batch, not paid
-per row.
+what any keyed stateful op pays (into the P state partitions of the
+stateful-section note in ``streaming.pipeline``). Arrow moves each
+key-batch into pandas, so per-event Python overhead is amortized per
+batch, not paid per row.
 """
 
 from __future__ import annotations

@@ -121,6 +121,10 @@ def test_dead_letter_split(spark, tmp_path):
     good_rows = spark.sql("SELECT * FROM dl_good").collect()
     dead_rows = spark.sql("SELECT * FROM dl_dead").collect()
     assert len(good_rows) == 1 and good_rows[0].event_id == 1
+    # the payload's own ``value`` field survives; the raw envelope
+    # column of the same name is the one dropped
+    assert good_rows[0].value == 1.5
+    assert good_rows[0].key == "1"
     assert len(dead_rows) == 1 and dead_rows[0].value == "{this is not json"
 
 

@@ -22,7 +22,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from streaming_data_spark.session import get_session  # noqa: E402
+from streaming_data_spark.session import (  # noqa: E402
+    BATCH_PARTITIONS_KEY,
+    batch_shuffle_partitions,
+    get_session,
+)
 import __spark_entry__ as entry  # noqa: E402
 
 # Same env-var resolution as scale_probe_100x.py (r13 ADVICE: the 4x
@@ -76,8 +80,8 @@ def main() -> None:
     # Partition-count sensitivity at x100 only (same env-resolved
     # dir + isdir guard as the SCALES loop — r13 ADVICE).
     if os.path.isdir(X100):
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(old) * 4))
+        old = batch_shuffle_partitions(spark)
+        spark.conf.set(BATCH_PARTITIONS_KEY, str(old * 4))
         try:
             df = fn(spark, X100)
             best = float("inf")
@@ -88,7 +92,7 @@ def main() -> None:
             report["x100_4xparts"] = {"sec": round(best, 3)}
             print("x100_4xparts", report["x100_4xparts"], file=sys.stderr)
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+            spark.conf.set(BATCH_PARTITIONS_KEY, str(old))
     print(json.dumps({"probe": f"{name}_plan_transition", "scales": report}))
     spark.stop()
 
